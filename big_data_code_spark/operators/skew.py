@@ -124,7 +124,7 @@ def salted_broadcast_left_join(
 
 
 def narrow_for_iteration(
-    df: DataFrame, src_file: str, target_bytes: int = 64 << 20
+    df: DataFrame, sf_dir: str, table: str, target_bytes: int = 64 << 20
 ) -> DataFrame:
     """Partition-count ceiling for a NARROW frame that an iterative
     driver loop persists and re-scans every round (guide §2.2/§5:
@@ -132,7 +132,9 @@ def narrow_for_iteration(
     excess task's scheduling cost by R).
 
     The frame's bytes are bounded above by its SOURCE table's
-    on-disk size (it drops the payload columns — e.g. the
+    on-disk size — the summed data-file bytes of
+    `cacheutil.fingerprint`, so a table directory counts its part
+    files, not its inode (it drops the payload columns — e.g. the
     quality-logit z-frame keeps 7 numerics of a documents row), so
     ceil(src_bytes / target_bytes) partitions keeps each partition
     under ~target_bytes at every scale: a small local corpus
@@ -144,12 +146,12 @@ def narrow_for_iteration(
     than a local-mode constant (`widen_for_compute`'s contract,
     mirrored)."""
     import math
-    import os
 
-    try:
-        size = os.stat(src_file).st_size
-    except OSError:
-        return df
+    from ..cacheutil import fingerprint
+
+    size = fingerprint(sf_dir, table)[1]
+    if not size:
+        return df  # missing table: leave the partitioning alone
     n = max(1, math.ceil(size / target_bytes))
     if n >= df.rdd.getNumPartitions():
         return df

@@ -31,6 +31,7 @@ from ..functions.text import (
     tokenize,
     word_shingles,
 )
+from ..cacheutil import serve_once, stage, track_persisted
 from ..operators import ann, dedup
 from ..sources.tables import load_table
 
@@ -223,8 +224,6 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one signature pass over the whole corpus, split by side — the
     # local stand-in for "read the master's stored signature table".
     # Tracked for `cacheutil.release_persisted()` in harness loops.
-    from ..cacheutil import track_persisted
-
     sigs = track_persisted(
         dedup.minhash_signatures(corpus).persist(StorageLevel.MEMORY_AND_DISK)
     )
@@ -629,55 +628,35 @@ def _embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load_table(spark, sf_dir, "embeddings")
 
 
-#: Exact brute-force top-k per (Spark application, corpus
-#: fingerprint) — FOUR eval consumers (recall, nDCG, truncation,
-#: the baseline itself) re-read this ground truth; it is queries×k
-#: rows, so caching the materialized frame turns every re-read into
-#: an InMemoryTableScan instead of a corpus scan (the knn_graph /
-#: ann_ivf build-once convention).
-_ANN_EXACT_CACHE: dict[tuple, DataFrame] = {}
-
-
-# shared with plans/swa.py's equiv-mapping cache; kept under the
-# historical local name for this module's call sites
-from ..cacheutil import evict_superseded as _evict_superseded
-
-
-def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, _ivf_cache_key(sf_dir))
-    cached = _ANN_EXACT_CACHE.get(key)
-    if cached is not None:
-        return cached
-    _evict_superseded(_ANN_EXACT_CACHE, key)
-    emb = _embeddings(spark, sf_dir)
-    queries = emb.where(F.col("vec_id") < ANN_N_QUERIES)
-    out = ann.cosine_topk(emb, queries, k=ANN_K).select(
-        "q_id", F.col("rank").cast("long").alias("rank"), "vec_id", "sim"
-    )
-    # r10: localCheckpoint instead of persist+count — same
-    # materialization, but it also TRUNCATES the logical plan to a
-    # scan of the checkpointed rows (guide §3.3). With a plain
-    # persist the cached frame keeps its full build lineage, and
-    # every eval consumer re-optimizes that subtree at each
-    # reference (mrr/ndcg/recall plans carried 30-50 Exchange nodes
-    # of pure plan text); the blocks are freed by the ContextCleaner
-    # once the cache entry is dropped and GC'd.
-    out = out.localCheckpoint(eager=True)
-    _ANN_EXACT_CACHE[key] = out
-    return out
-
-
 def ann_cosine_topk_build(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cold-build twin of `ann_cosine_topk` (r11, VERDICT r10 #1):
-    the identical exact brute-force top-k, computed from the corpus
-    on EVERY call — `_ANN_EXACT_CACHE` is never read and never
-    written, so the bench charges the ground-truth build to this row
-    on every rep while the eval consumers (recall/nDCG/MRR/
-    truncation) time the serve path. Same oracle (bit-identical)."""
+    """The exact brute-force top-k plan `ann_cosine_topk` serves.
+    Registered as its cold-build twin (r11, VERDICT r10 #1): computed
+    from the corpus on EVERY call without touching the serve-once
+    store, so the bench charges the ground-truth build to this row on
+    every rep while the eval consumers time the serve path. Same
+    oracle (bit-identical)."""
     emb = _embeddings(spark, sf_dir)
     queries = emb.where(F.col("vec_id") < ANN_N_QUERIES)
     return ann.cosine_topk(emb, queries, k=ANN_K).select(
         "q_id", F.col("rank").cast("long").alias("rank"), "vec_id", "sim"
+    )
+
+
+def ann_cosine_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact brute-force top-k, served once per (application, corpus)
+    — FOUR eval consumers (recall, nDCG, truncation, the baseline
+    itself) re-read this queries×k ground truth, so each re-read is
+    an InMemoryTableScan instead of a corpus scan.
+
+    r10: localCheckpoint instead of persist+count — same
+    materialization, but it also TRUNCATES the logical plan to a
+    scan of the checkpointed rows (guide §3.3). With a plain persist
+    the served frame keeps its full build lineage, and every eval
+    consumer re-optimizes that subtree at each reference (mrr/ndcg/
+    recall plans carried 30-50 Exchange nodes of pure plan text)."""
+    return serve_once(
+        spark, "ann_cosine_topk", sf_dir, "embeddings",
+        lambda: ann_cosine_topk_build(spark, sf_dir).localCheckpoint(eager=True),
     )
 
 
@@ -758,25 +737,25 @@ SELECT q_id, rank, vec_id, sim FROM ranked WHERE rank <= {ANN_K}
 """
 
 
-#: (sf_dir, corpus fingerprint) → trained IVF centroid matrix. The
-#: index build is a one-time offline step (train once, store k×dim
-#: doubles, serve many searches); training is deterministic
-#: (md5-init), so the cache returns the exact same index a fresh
-#: train would. Keyed by the embeddings file's (mtime, size) so a
-#: regenerated corpus under the same path invalidates the index
-#: instead of silently serving stale centroids.
-_IVF_INDEX_CACHE: dict[tuple[str, float, int], list[list[float]]] = {}
+def _ivf_index(spark: SparkSession, sf_dir: str) -> list[list[float]]:
+    """The trained IVF centroid matrix, served once per corpus. The
+    index build is a one-time offline step (train once, store k×dim
+    doubles, serve many searches); training is deterministic
+    (md5-init), so the store returns the exact index a fresh train
+    would."""
+    return serve_once(
+        spark, "ivf_index", sf_dir, "embeddings",
+        lambda: ann.ivf_train(_embeddings(spark, sf_dir)),
+    )
 
 
-def _ivf_cache_key(sf_dir: str) -> tuple[str, float, int]:
-    import os
-
-    path = os.path.join(sf_dir, "embeddings.parquet")
-    try:
-        st = os.stat(path)
-        return (sf_dir, st.st_mtime, st.st_size)
-    except OSError:
-        return (sf_dir, 0.0, 0)
+def _ivf_search(
+    spark: SparkSession, sf_dir: str, centroids: list[list[float]]
+) -> DataFrame:
+    emb = _embeddings(spark, sf_dir)
+    queries = emb.where(F.col("vec_id") < ANN_N_QUERIES)
+    out = ann.ivf_ann_topk(emb, queries, k=ANN_K, centroids=centroids)
+    return out.select("q_id", F.col("rank").cast("long").alias("rank"), "vec_id", "sim")
 
 
 def ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -792,30 +771,18 @@ def ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle-checkable: ANN_IVF_SQL restates the init hash, both
     Lloyd rounds, the dense re-numbering of non-empty cells, the
     n_probe=2 probe, and the candidate ranking end to end."""
-    emb = _embeddings(spark, sf_dir)
-    key = _ivf_cache_key(sf_dir)
-    centroids = _IVF_INDEX_CACHE.get(key)
-    if centroids is None:
-        centroids = ann.ivf_train(emb)
-        _IVF_INDEX_CACHE[key] = centroids
-    queries = emb.where(F.col("vec_id") < ANN_N_QUERIES)
-    out = ann.ivf_ann_topk(emb, queries, k=ANN_K, centroids=centroids)
-    return out.select("q_id", F.col("rank").cast("long").alias("rank"), "vec_id", "sim")
+    return _ivf_search(spark, sf_dir, _ivf_index(spark, sf_dir))
 
 
 def ann_ivf_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cold-build twin of `ann_ivf` (r11, VERDICT r10 #1): k-means
-    index training runs on EVERY call — `_IVF_INDEX_CACHE` is never
-    read and never written — so the bench charges train + search to
-    this row on every rep while `ann_ivf` itself times the
-    train-once/serve-many path (the documented IVF convention).
-    Training is deterministic (md5 init), so the freshly trained
-    index is bit-identical to the cached one; same oracle."""
-    emb = _embeddings(spark, sf_dir)
-    centroids = ann.ivf_train(emb)
-    queries = emb.where(F.col("vec_id") < ANN_N_QUERIES)
-    out = ann.ivf_ann_topk(emb, queries, k=ANN_K, centroids=centroids)
-    return out.select("q_id", F.col("rank").cast("long").alias("rank"), "vec_id", "sim")
+    index training runs on EVERY call without touching the
+    serve-once store, so the bench charges train + search to this
+    row on every rep while `ann_ivf` itself times the
+    train-once/serve-many path. Training is deterministic (md5
+    init), so the freshly trained index is bit-identical to the
+    served one; same oracle."""
+    return _ivf_search(spark, sf_dir, ann.ivf_train(_embeddings(spark, sf_dir)))
 
 
 # Restates operators/ann.py::ivf_train + ivf_ann_topk exactly:
@@ -908,9 +875,28 @@ PQ_M = 4        #: subspaces (64-dim vectors → 16-dim subvectors)
 PQ_SUBDIM = 16
 PQ_K = 8        #: codebook size per subspace (256 in production)
 
-#: (corpus fingerprint, m) → trained sub-codebook (same build/search
-#: split + invalidation rule as _IVF_INDEX_CACHE).
-_PQ_CODEBOOK_CACHE: dict[tuple[str, float, int, int], list[list[float]]] = {}
+def _pq_codebooks(spark: SparkSession, sf_dir: str) -> list[list[list[float]]]:
+    """The PQ_M trained sub-codebooks, served once per corpus (the
+    `_ivf_index` build/search split) — `embedding_pq`, `ann_pq` and
+    `ann_ivf_pq` all read the same served codebooks."""
+
+    def train() -> list[list[list[float]]]:
+        emb = _embeddings(spark, sf_dir)
+        dv = F.transform(F.col("embedding"), lambda x: x.cast("double"))
+        return [
+            ann.ivf_train(
+                emb.select(
+                    "vec_id",
+                    F.slice(dv, m * PQ_SUBDIM + 1, PQ_SUBDIM).alias("sub"),
+                ),
+                n_cells=PQ_K,
+                iters=1,
+                vec_col="sub",
+            )
+            for m in range(PQ_M)
+        ]
+
+    return serve_once(spark, "pq_codebooks", sf_dir, "embeddings", train)
 
 
 def embedding_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -932,20 +918,8 @@ def embedding_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     emb = _embeddings(spark, sf_dir)
     dv = F.transform(F.col("embedding"), lambda x: x.cast("double"))
-    fp = _ivf_cache_key(sf_dir)
-    codebooks = []
-    for m in range(PQ_M):
-        key = (*fp, m)
-        cb = _PQ_CODEBOOK_CACHE.get(key)
-        if cb is None:
-            sub = emb.select(
-                "vec_id", F.slice(dv, m * PQ_SUBDIM + 1, PQ_SUBDIM).alias("sub")
-            )
-            cb = ann.ivf_train(sub, n_cells=PQ_K, iters=1, vec_col="sub")
-            _PQ_CODEBOOK_CACHE[key] = cb
-        codebooks.append(cb)
     codes, errs = [], []
-    for m, cb in enumerate(codebooks):
+    for m, cb in enumerate(_pq_codebooks(spark, sf_dir)):
         dists = ann._centroid_dists(
             F.slice(dv, m * PQ_SUBDIM + 1, PQ_SUBDIM), cb
         )
@@ -1092,8 +1066,7 @@ def ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     codes_df = embedding_pq(spark, sf_dir)
     emb = _embeddings(spark, sf_dir)
-    fp = _ivf_cache_key(sf_dir)
-    codebooks = [_PQ_CODEBOOK_CACHE[(*fp, m)] for m in range(PQ_M)]
+    codebooks = _pq_codebooks(spark, sf_dir)
     dv = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     q_tables = emb.where(F.col("vec_id") < ANN_N_QUERIES).select(
         F.col("vec_id").alias("q_id"),
@@ -1180,13 +1153,9 @@ def ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     IVF-training, and ADC-table CTEs and is hash-exact including
     the float adist. Returns (q_id, rank, vec_id, adist).
     """
-    codes_df = embedding_pq(spark, sf_dir)  # also fills the PQ cache
+    codes_df = embedding_pq(spark, sf_dir)
     emb = _embeddings(spark, sf_dir)
-    key = _ivf_cache_key(sf_dir)
-    centroids = _IVF_INDEX_CACHE.get(key)
-    if centroids is None:
-        centroids = ann.ivf_train(emb)
-        _IVF_INDEX_CACHE[key] = centroids
+    centroids = _ivf_index(spark, sf_dir)
     cells = ann.ivf_assign(emb, centroids, "vec_id", "embedding").select(
         F.col("id").alias("vec_id"), "cell"
     )
@@ -1210,7 +1179,7 @@ def ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("cell"),
     )
-    codebooks = [_PQ_CODEBOOK_CACHE[(*key, m)] for m in range(PQ_M)]
+    codebooks = _pq_codebooks(spark, sf_dir)
     q_tables = queries.select(
         F.col("vec_id").alias("q_id"),
         *[
@@ -2300,40 +2269,21 @@ def stratified_sample_rng(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.sampleBy("lang", fractions, seed=42).select("doc_id", "lang")
 
 
-#: Finished dedup verdict table per (Spark application, corpus
-#: fingerprint) — FIVE registered consumers (the verdict query
-#: itself, `dedup_cluster_stats`, `dedup_keep_best`,
-#: `dedup_weighted_sample`, `dedup_eval_pr`) start from this
-#: mapping, and production computes the keep verdicts ONCE and
-#: serves them; it does not re-run LSH + connected components per
-#: downstream report (the `knn_graph` / `ann_cosine_topk`
-#: build-once convention). localCheckpoint (not persist) so the
-#: cached frame's plan is truncated to a scan of the materialized
-#: verdicts; the LSH+CC build plans stay under the CI scale audits
-#: via `dedup_corpus_final_audit_plans`. NOT release-tracked (it IS
-#: the index); first consumer pays the build, exactly the
-#: documented IVF convention.
-_DEDUP_CC_CACHE: dict[tuple, DataFrame] = {}
-
-
-def _docs_cache_key(sf_dir: str) -> tuple[str, float, int]:
-    """`_ivf_cache_key` for documents-derived caches: the dedup
-    corpus (`_corpus`) is a pure function of documents.parquet."""
-    import os
-
-    path = os.path.join(sf_dir, "documents.parquet")
-    try:
-        st = os.stat(path)
-        return (sf_dir, st.st_mtime, st.st_size)
-    except OSError:
-        return (sf_dir, 0.0, 0)
-
-
-def _dedup_corpus_final_build(spark: SparkSession, sf_dir: str) -> DataFrame:
+def dedup_corpus_final_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The verdict-table build plan (LSH pairs → CC → canonical
-    join). `connected_components` executes its fixed point eagerly,
-    so calling this RUNS the dedup; the registered query calls it
-    once per (application, corpus) via `_DEDUP_CC_CACHE`."""
+    join) that `dedup_corpus_final` serves once per (application,
+    corpus). `connected_components` executes its fixed point
+    eagerly, so calling this RUNS the dedup.
+
+    Registered as the cold-build twin of `dedup_corpus_final` (r11,
+    VERDICT r10 #1): the build runs on EVERY call without touching
+    the serve-once store, so the bench's min-of-reps protocol charges
+    the full build to this row on every rep while the five verdict
+    consumers time the serve path. Its registered frame also keeps
+    the corpus-sized final canonical left-join under the
+    registry-wide plan audits (r10 ADVICE #2 — the served frame is a
+    checkpoint scan). Same oracle as `dedup_corpus_final`
+    (bit-identical rows)."""
     from ..operators.graph import connected_components
 
     corpus = _corpus(spark, sf_dir)
@@ -2364,32 +2314,20 @@ def dedup_corpus_final(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Composition of `dedup.minhash_lsh_pairs` + `graph.
     connected_components`; docs in no pair are their own canonical.
-    The finished verdict table is cached per (session, corpus
-    fingerprint) — see `_DEDUP_CC_CACHE`.
+    The finished verdict table is served once per (application,
+    corpus): FIVE registered consumers (the verdict query itself,
+    `dedup_cluster_stats`, `dedup_keep_best`, `dedup_weighted_sample`,
+    `dedup_eval_pr`) start from this mapping, and production computes
+    the keep verdicts ONCE and serves them; it does not re-run LSH +
+    connected components per downstream report. localCheckpoint (not
+    persist) truncates the served frame's plan to a scan of the
+    materialized verdicts; the LSH+CC build plans stay under the CI
+    scale audits via `dedup_corpus_final_audit_plans`.
     """
-    key = (spark.sparkContext.applicationId, _docs_cache_key(sf_dir))
-    cached = _DEDUP_CC_CACHE.get(key)
-    if cached is not None:
-        return cached
-    _evict_superseded(_DEDUP_CC_CACHE, key)
-    out = _dedup_corpus_final_build(spark, sf_dir).localCheckpoint(eager=True)
-    _DEDUP_CC_CACHE[key] = out
-    return out
-
-
-def dedup_corpus_final_build(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cold-build twin of `dedup_corpus_final` (r11, VERDICT r10
-    #1): identical verdict table, but the LSH → CC → canonical-join
-    build runs on EVERY call — `_DEDUP_CC_CACHE` is never read and
-    never written, so the bench's min-of-reps protocol charges the
-    full build to this row on every rep. The five verdict consumers
-    time the serve path; THIS entry times the compute the session's
-    first consumer pays. Its registered frame also keeps the
-    corpus-sized final canonical left-join under the registry-wide
-    plan audits (r10 ADVICE #2 — the served frame is a checkpoint
-    scan, so the audits could no longer see that join). Same oracle
-    as `dedup_corpus_final` (bit-identical rows)."""
-    return _dedup_corpus_final_build(spark, sf_dir)
+    return serve_once(
+        spark, "dedup_corpus_final", sf_dir, "documents",
+        lambda: dedup_corpus_final_build(spark, sf_dir).localCheckpoint(eager=True),
+    )
 
 
 def dedup_corpus_final_audit_plans(spark: SparkSession, sf_dir: str):
@@ -2515,8 +2453,6 @@ def training_corpus_final(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).between(QF_MIN_MEAN_TOKLEN, QF_MAX_MEAN_TOKLEN)
     )
     from pyspark import StorageLevel
-
-    from ..cacheutil import track_persisted
 
     # r10: qual feeds the dedup stage (survivors) AND the final
     # verdict join — persist so the tokenize + quality-feature pass
@@ -4104,8 +4040,6 @@ def exact_substring_dedup(
     """
     from pyspark import StorageLevel
 
-    from ..cacheutil import track_persisted
-
     corpus = _corpus(spark, sf_dir)
     # three consumers (sizes + both join sides) would each re-run
     # the explode + window-hash build — persist it once, like the
@@ -4264,7 +4198,6 @@ def substring_dedup_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark import StorageLevel
 
-    from ..cacheutil import track_persisted
     from ..operators.skew import widen_for_compute
 
     k = SUBSTR_WIN_K
@@ -4525,29 +4458,17 @@ KNN_BANDS = 4
 KNN_MIN_ROWS = 4
 KNN_MAX_ROWS = 24
 
-#: (embeddings fingerprint) → derived band rows (same invalidation
-#: rule as the IVF index cache; the count is one cheap parquet
-#: metadata read, cached so repeated graph builds don't re-count).
-_KNN_ROWS_CACHE: dict[tuple[str, float, int], int] = {}
-
-
 def _knn_band_rows(spark: SparkSession, sf_dir: str) -> int:
-    key = _ivf_cache_key(sf_dir)
-    rows = _KNN_ROWS_CACHE.get(key)
-    if rows is None:
+    """Derived band rows, served once per corpus (the count is one
+    cheap parquet metadata read, served so repeated graph builds —
+    the `knn_graph_build` twin included — don't re-count)."""
+
+    def derive() -> int:
         n = _embeddings(spark, sf_dir).count()
-        rows = min(
-            KNN_MAX_ROWS, max(KNN_MIN_ROWS, math.ceil(math.log2(max(n, 2))))
-        )
-        _KNN_ROWS_CACHE[key] = rows
-    return rows
+        return min(KNN_MAX_ROWS, max(KNN_MIN_ROWS, math.ceil(math.log2(max(n, 2)))))
 
+    return serve_once(spark, "knn_band_rows", sf_dir, "embeddings", derive)
 
-#: Finished kNN edge list per (Spark application, corpus
-#: fingerprint) — the graph-family index cache (same split +
-#: invalidation rule as _IVF_INDEX_CACHE; the applicationId key
-#: scopes the cached DataFrame to the session that owns its blocks).
-_KNN_GRAPH_CACHE: dict[tuple, DataFrame] = {}
 
 #: SQL restatement of `_knn_band_rows` over a CTE `c` holding the
 #: corpus — the oracle derives the identical row count from the same
@@ -4589,8 +4510,8 @@ def knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph: EIGHT registry consumers (PageRank, triangles, LPA,
     k-core, HITS, node-Jaccard, Adamic-Adar, label agreement) start
     from these edges, and production builds the graph once and
-    serves it, it does not re-band per downstream query. The cached
-    frame is persisted but NOT release-tracked (it IS the index);
+    serves it, it does not re-band per downstream query. The served
+    frame lives in the serve-once store (it IS the index);
     the intermediate pair table is dropped as soon as the edges
     materialize. First consumer pays the build — with min-of-reps
     timing, later reps measure the serve path, exactly the
@@ -4598,40 +4519,16 @@ def knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Returns (src, rank, dst, cos).
     """
-    key = (spark.sparkContext.applicationId, _ivf_cache_key(sf_dir))
-    cached = _KNN_GRAPH_CACHE.get(key)
-    if cached is not None:
-        return cached
-    _evict_superseded(_KNN_GRAPH_CACHE, key)
-    edges = _knn_graph_build(spark, sf_dir)
-    _KNN_GRAPH_CACHE[key] = edges
-    return edges
+    return serve_once(
+        spark, "knn_graph", sf_dir, "embeddings",
+        lambda: knn_graph_build(spark, sf_dir),
+    )
 
 
-def _knn_graph_build(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The banded-LSH kNN edge-list build (signatures → band self-
-    join → symmetric top-k), materialized via localCheckpoint —
-    runs the FULL build on every call; `knn_graph` caches the result
-    per (application, corpus), `knn_graph_build` serves it cold."""
-    from pyspark import StorageLevel
-
-    emb = _embeddings(spark, sf_dir)
-    rows = _knn_band_rows(spark, sf_dir)
-    # the symmetric union below consumes the pair frame TWICE —
-    # without a persist the whole banded-LSH build (signatures +
-    # band join + candidate cosines) runs once per consumer
-    # (measured 78s → ~40s at the sf10 probe). Dropped as soon as
-    # the finished edges materialize into the graph cache below.
-    pairs = ann.cosine_dup_pairs_lsh(
-        emb,
-        threshold=-1.0,
-        n_planes=KNN_BANDS * rows,
-        n_bands=KNN_BANDS,
-        arrow_sig=True,
-        arrow_dot=True,
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    # materialize before fan-out (cold-cache branch races)
-    pairs.count()
+def _knn_edges(pairs: DataFrame) -> DataFrame:
+    """The lazy symmetric top-k edge list over `_knn_pairs` — the one
+    plan `knn_graph_build` materializes and
+    `knn_graph_build_audit_plans` exposes unexecuted."""
     sym = pairs.select(
         F.col("vec_id_a").alias("src"), F.col("vec_id_b").alias("dst"), "cos"
     ).unionByName(
@@ -4640,34 +4537,56 @@ def _knn_graph_build(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     w = Window.partitionBy("src").orderBy(F.desc("cos"), "dst")
+    return (
+        sym.withColumn("rank", F.row_number().over(w).cast("long"))
+        .where(F.col("rank") <= KNN_K)
+        .select("src", "rank", "dst", "cos")
+    )
+
+
+def _knn_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    rows = _knn_band_rows(spark, sf_dir)
+    return ann.cosine_dup_pairs_lsh(
+        _embeddings(spark, sf_dir),
+        threshold=-1.0,
+        n_planes=KNN_BANDS * rows,
+        n_bands=KNN_BANDS,
+        arrow_sig=True,
+        arrow_dot=True,
+    )
+
+
+def knn_graph_build(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The banded-LSH kNN edge-list build (signatures → band self-
+    join → symmetric top-k), materialized via localCheckpoint, that
+    `knn_graph` serves once per (application, corpus).
+
+    Registered as the cold-build twin of `knn_graph` (r11, VERDICT
+    r10 #1): the FULL build runs on every call without reading or
+    writing the served graph, so the bench's min-of-reps protocol
+    charges it to this row on every rep (the derived band-row count
+    is still served) while the nine graph-family consumers time the
+    serve path. Same oracle as `knn_graph` (bit-identical rows)."""
+    from pyspark import StorageLevel
+
+    # the symmetric union consumes the pair frame TWICE — without a
+    # persist the whole banded-LSH build (signatures + band join +
+    # candidate cosines) runs once per consumer (measured 78s → ~40s
+    # at the sf10 probe). Dropped as soon as the edges materialize.
+    pairs = _knn_pairs(spark, sf_dir).persist(StorageLevel.MEMORY_AND_DISK)
+    # materialize before fan-out (cold-cache branch races)
+    pairs.count()
     # r10: localCheckpoint instead of persist+count — identical
-    # materialized rows, but the cached frame's logical plan is
+    # materialized rows, but the served frame's logical plan is
     # TRUNCATED to a scan of the checkpointed rows (guide §3.3).
     # With a plain persist every one of the 8+ graph consumers
     # re-optimized the full banded-LSH build lineage at EVERY
     # self-join reference — triangle_count_knn's explain carried
     # 2,126 Exchange / 5,896 ArrowEval nodes of pure plan text and
-    # paid whole seconds of Catalyst time per query. Blocks are
-    # freed by the ContextCleaner once the cache entry drops.
-    edges = (
-        sym.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= KNN_K)
-        .select("src", "rank", "dst", "cos")
-        .localCheckpoint(eager=True)
-    )
+    # paid whole seconds of Catalyst time per query.
+    edges = _knn_edges(pairs).localCheckpoint(eager=True)
     pairs.unpersist()
     return edges
-
-
-def knn_graph_build(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cold-build twin of `knn_graph` (r11, VERDICT r10 #1): the
-    identical edge list, but computed from the corpus on EVERY call
-    — `_KNN_GRAPH_CACHE` is never read and never written, so the
-    bench's min-of-reps protocol charges the full banded-LSH build
-    to this row on every rep. The nine graph-family consumers time
-    the serve path; THIS entry times the build the session's first
-    consumer pays. Same oracle as `knn_graph` (bit-identical rows)."""
-    return _knn_graph_build(spark, sf_dir)
 
 
 def knn_graph_build_audit_plans(spark: SparkSession, sf_dir: str):
@@ -4676,29 +4595,7 @@ def knn_graph_build_audit_plans(spark: SparkSession, sf_dir: str):
     build executes-and-vanishes at call time), so expose the
     UNEXECUTED banded-LSH pair join + symmetric top-k window over
     un-persisted inputs for the registry-wide scale audits."""
-    emb = _embeddings(spark, sf_dir)
-    rows = _knn_band_rows(spark, sf_dir)
-    pairs = ann.cosine_dup_pairs_lsh(
-        emb,
-        threshold=-1.0,
-        n_planes=KNN_BANDS * rows,
-        n_bands=KNN_BANDS,
-        arrow_sig=True,
-        arrow_dot=True,
-    )
-    sym = pairs.select(
-        F.col("vec_id_a").alias("src"), F.col("vec_id_b").alias("dst"), "cos"
-    ).unionByName(
-        pairs.select(
-            F.col("vec_id_b").alias("src"), F.col("vec_id_a").alias("dst"), "cos"
-        )
-    )
-    w = Window.partitionBy("src").orderBy(F.desc("cos"), "dst")
-    return [
-        sym.withColumn("rank", F.row_number().over(w).cast("long"))
-        .where(F.col("rank") <= KNN_K)
-        .select("src", "rank", "dst", "cos")
-    ]
+    return [_knn_edges(_knn_pairs(spark, sf_dir))]
 
 
 KNN_GRAPH_SQL = f"""
@@ -4788,8 +4685,6 @@ def knn_graph_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     Returns (src, rank, dst, cos) — identical to `knn_graph`.
     """
     from pyspark import StorageLevel
-
-    from ..cacheutil import track_persisted
 
     emb = _embeddings(spark, sf_dir)
     rows = _knn_band_rows(spark, sf_dir)
@@ -4911,7 +4806,6 @@ def gopher_repetition_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark import StorageLevel
 
-    from ..cacheutil import track_persisted
     from ..operators.skew import widen_for_compute
 
     # r10: the tokenize pass feeds TWO branches (the per-doc scalar
@@ -5297,8 +5191,6 @@ def _qlt_std_frames(labeled: DataFrame):
     helper previously re-implemented this derivation verbatim)."""
     from pyspark import StorageLevel
 
-    from ..cacheutil import track_persisted
-
     # r10: three consumers (stats1, the z-frame, stats2 through it)
     # would each re-run the tokenize-heavy feature pass — persist the
     # labeled frame once (tracked, so harness loops release it).
@@ -5411,11 +5303,8 @@ def quality_logit_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     — the weight vector after each round (r7: over the standardized
     features, with the z_sat² curvature weight).
     """
-    import os
-
     from pyspark import StorageLevel
 
-    from ..cacheutil import track_persisted
     from ..operators.skew import narrow_for_iteration
 
     # r11 (VERDICT r10 #2): the standardized frame is 7 numerics per
@@ -5425,8 +5314,7 @@ def quality_logit_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cluster where the scan is already right-sized).
     labeled = track_persisted(
         narrow_for_iteration(
-            _qlt_labeled_std(spark, sf_dir),
-            os.path.join(sf_dir, "documents.parquet"),
+            _qlt_labeled_std(spark, sf_dir), sf_dir, "documents"
         ).persist(StorageLevel.MEMORY_AND_DISK)
     )
     from ..session import no_aqe
@@ -5730,8 +5618,6 @@ def quality_logit_holdout_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # runs once, not once per downstream consumer
     consts = consts.localCheckpoint(eager=True)
     consts2 = consts2.localCheckpoint(eager=True)
-    import os
-
     from ..operators.skew import narrow_for_iteration
 
     # r11: same iteration-frame sizing as quality_logit_train
@@ -5746,7 +5632,8 @@ def quality_logit_holdout_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "zt",
                 F.expr("(zt * zt - mu_u) / sd_u").alias("zu"),
             ),
-            os.path.join(sf_dir, "documents.parquet"),
+            sf_dir,
+            "documents",
         )
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
@@ -5787,8 +5674,6 @@ def quality_logit_holdout_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         "y",
         F.expr(f"round(1e0 / (1e0 + exp(-({_QLT_MARGIN}))), 9)").alias("p"),
     )
-    from ..cacheutil import track_persisted
-
     scored = track_persisted(scored.persist(StorageLevel.MEMORY_AND_DISK))
     grp = scored.groupBy("p").agg(
         F.count(F.lit(1)).cast("long").alias("cnt"),
@@ -6484,8 +6369,6 @@ def pagerank_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     edges = knn_graph(spark, sf_dir).select("src", "dst")
     from pyspark import StorageLevel
 
-    from ..cacheutil import track_persisted
-
     edges = track_persisted(edges.persist(StorageLevel.MEMORY_AND_DISK))
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
     nodes = _embeddings(spark, sf_dir).select("vec_id")
@@ -6731,8 +6614,6 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark import StorageLevel
 
-    from ..cacheutil import track_persisted
-
     # same 2^R lineage re-derivation as bpe_encode (each round
     # references `words` twice) — persist the vocab-sized base once.
     words = track_persisted(
@@ -6831,8 +6712,6 @@ def bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc with ≥1 token.
     """
     from pyspark import StorageLevel
-
-    from ..cacheutil import track_persisted
 
     # each merge round references `words` twice (pair counts + the
     # merge itself), so the final encoding's lineage re-derives w0
@@ -7261,8 +7140,6 @@ def multimodal_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     sigs = assets.mapInPandas(run, "asset_id long, phash string")
     from pyspark import StorageLevel
 
-    from ..cacheutil import track_persisted
-
     sigs = track_persisted(sigs.persist(StorageLevel.MEMORY_AND_DISK))
     bands = sigs.select(
         "asset_id",
@@ -7508,8 +7385,6 @@ def triangle_count_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     g = knn_graph(spark, sf_dir)
     from pyspark import StorageLevel
-
-    from ..cacheutil import track_persisted
 
     # five consumers below (degree build + both wedge sides + the
     # closure probe) would each re-run the banded-LSH kNN
@@ -7955,13 +7830,20 @@ QUALITY_LOGIT_CALIBRATION_SQL = _quality_logit_calibration_sql()
 #: the index build trains on a sample and k×dim stays ≪ data).
 SEMDEDUP_TARGET_CELL = 64
 
-#: (corpus fingerprint) → (derived n_cells, trained SemDeDup
-#: centroid matrix) — same build/search split + invalidation rule
-#: as _IVF_INDEX_CACHE, but trained on the dup-seeded
-#: _vector_corpus at the corpus-derived cell count.
-_SEMDEDUP_INDEX_CACHE: dict[
-    tuple[str, float, int], tuple[int, list[list[float]]]
-] = {}
+def _semdedup_index(
+    spark: SparkSession, sf_dir: str, corpus: DataFrame
+) -> list[list[float]]:
+    """The trained SemDeDup centroid matrix, served once per corpus
+    — the `_ivf_index` build/search split, trained on the dup-seeded
+    `_vector_corpus` at the corpus-derived cell count.
+    `semdedup_kmeans` and `semdedup_incremental` serve the SAME
+    index."""
+
+    def train() -> list[list[float]]:
+        n_cells = max(1, math.ceil(corpus.count() / SEMDEDUP_TARGET_CELL))
+        return ann.ivf_train(corpus, n_cells=n_cells)
+
+    return serve_once(spark, "semdedup_index", sf_dir, "embeddings", train)
 
 
 def _semdedup_cell_pairs_kernel(threshold: float):
@@ -8051,23 +7933,14 @@ def semdedup_kmeans(
     the cell partition is the documented trade, asserted in tests).
     """
     corpus = _vector_corpus(spark, sf_dir)
-    key = _ivf_cache_key(sf_dir)
     if n_cells is None:
         # registered contract: derive k from the corpus count; only
-        # the derived index is cached (an explicit n_cells is the
+        # the derived index is served (an explicit n_cells is the
         # test/tuning lever and always trains fresh).
-        cached = _SEMDEDUP_INDEX_CACHE.get(key)
-        if cached is not None:
-            n_cells, centroids = cached
-        else:
-            n_cells = max(1, math.ceil(corpus.count() / SEMDEDUP_TARGET_CELL))
-            centroids = ann.ivf_train(corpus, n_cells=n_cells)
-            _SEMDEDUP_INDEX_CACHE[key] = (n_cells, centroids)
+        centroids = _semdedup_index(spark, sf_dir, corpus)
     else:
         centroids = ann.ivf_train(corpus, n_cells=n_cells)
     from pyspark import StorageLevel
-
-    from ..cacheutil import track_persisted
 
     # assignment feeds two consumers (the pair stage + the output
     # join) — persist it once (tracked/releasable). The per-vector
@@ -8208,12 +8081,6 @@ _HIER_K2_SQL = (
     f"greatest(1, CAST(ceil({_HIER_LEAVES_SQL} / {_HIER_K1_SQL}) AS INT))"
 )
 
-#: (corpus fingerprint) → (k2, level-1 centroids, level-2 centroid
-#: blocks) — the hierarchical index, built once per corpus (the
-#: `_SEMDEDUP_INDEX_CACHE` convention).
-_SEMDEDUP_HIER_INDEX_CACHE: dict[tuple, tuple] = {}
-
-
 def semdedup_hierarchical(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup with a HIERARCHICAL (two-stage) k-means index — the
     registered n^1.5 scale path for derived-k clustering (r8,
@@ -8247,21 +8114,18 @@ def semdedup_hierarchical(spark: SparkSession, sf_dir: str) -> DataFrame:
     composite leaf id.
     """
     corpus = _vector_corpus(spark, sf_dir)
-    key = _ivf_cache_key(sf_dir)
-    cached = _SEMDEDUP_HIER_INDEX_CACHE.get(key)
-    if cached is not None:
-        k2, cents1, cents2 = cached
-    else:
-        k2, cents1, cents2 = _semdedup_hier_index(corpus)
-        _SEMDEDUP_HIER_INDEX_CACHE[key] = (k2, cents1, cents2)
-    return _semdedup_hier_apply(corpus, k2, cents1, cents2)
+    index = serve_once(
+        spark, "semdedup_hier_index", sf_dir, "embeddings",
+        lambda: _semdedup_hier_index(corpus),
+    )
+    return _semdedup_hier_apply(corpus, *index)
 
 
 def _semdedup_hier_index(corpus: DataFrame) -> tuple:
     """The two-stage k-means index train (k1 = ceil(√leaves) coarse
     Lloyd, then k2 per-cell grouped Lloyd) — runs the train jobs on
-    every call; `semdedup_hierarchical` caches the result per
-    corpus, `semdedup_hierarchical_build` serves it cold."""
+    every call; `semdedup_hierarchical` serves the result once per
+    corpus, `semdedup_hierarchical_build` trains it cold."""
     n = corpus.count()
     leaves = max(1.0, math.ceil(n / SEMDEDUP_TARGET_CELL))
     k1 = max(1, math.ceil(math.sqrt(leaves)))
@@ -8275,9 +8139,8 @@ def _semdedup_hier_index(corpus: DataFrame) -> tuple:
 
 def semdedup_hierarchical_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cold-build twin of `semdedup_hierarchical` (r11, VERDICT r10
-    #1/#8): the two-level k-means index is TRAINED on every call —
-    `_SEMDEDUP_HIER_INDEX_CACHE` is never read and never written —
-    so the bench's min-of-reps protocol charges the full index train
+    #1/#8): the two-level k-means index is TRAINED on every call
+    without touching the serve-once store, so the bench's min-of-reps protocol charges the full index train
     + leaf assignment + pair sweep to this row on every rep, the
     first-session cost the served entry's warm reps hide. Training
     is deterministic (md5 init) → bit-identical output, same oracle."""
@@ -8292,8 +8155,6 @@ def _semdedup_hier_apply(
     two-stage index — the shared tail of `semdedup_hierarchical`
     and its cold-build twin."""
     from pyspark import StorageLevel
-
-    from ..cacheutil import track_persisted
 
     asg1 = ann.ivf_assign(corpus, cents1, "vec_id", "embedding")
     asg = track_persisted(
@@ -8446,8 +8307,6 @@ def label_propagation_knn(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
     )
     from pyspark import StorageLevel
-
-    from ..cacheutil import track_persisted
 
     # one symmetric edge table re-joined every round — persisted
     # (tracked/releasable), not checkpointed: LPA_ROUNDS is a small
@@ -9413,8 +9272,6 @@ def minhash_band_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark import StorageLevel
 
-    from ..cacheutil import track_persisted
-
     corpus = _corpus(spark, sf_dir)
     sigs = track_persisted(
         dedup.minhash_signatures(corpus).persist(StorageLevel.MEMORY_AND_DISK)
@@ -9660,13 +9517,6 @@ FROM corpus c LEFT JOIN per p ON c.doc_id = p.doc_id
 #: wave-2 operators after the band-sweep re-contract.
 TOPIC_MAX_CELLS = 256
 
-#: (embeddings fingerprint) → (derived n_cells, centroids) for the
-#: RAW embeddings table (no dup seeding) — `topic_cluster_mix`'s
-#: index, cached under the same invalidation rule as
-#: `_SEMDEDUP_INDEX_CACHE` (which holds the dup-seeded corpus's).
-_TOPIC_INDEX_CACHE: dict[tuple[str, float, int], tuple[int, list[list[float]]]] = {}
-
-
 def topic_cluster_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-composition report by semantic cluster (r7) — the
     "what is in my corpus" table (WIMBD-style audit; the cluster
@@ -9698,17 +9548,16 @@ def topic_cluster_mix(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id",
         F.transform("embedding", lambda x: x.cast("double")).alias("embedding"),
     )
-    key = _ivf_cache_key(sf_dir)
-    cached = _TOPIC_INDEX_CACHE.get(key)
-    if cached is not None:
-        n_cells, centroids = cached
-    else:
+
+    def train() -> list[list[float]]:
         n_cells = min(
             TOPIC_MAX_CELLS,
             max(1, math.ceil(emb.count() / SEMDEDUP_TARGET_CELL)),
         )
-        centroids = ann.ivf_train(emb, n_cells=n_cells)
-        _TOPIC_INDEX_CACHE[key] = (n_cells, centroids)
+        return ann.ivf_train(emb, n_cells=n_cells)
+
+    # the RAW embeddings' index (no dup seeding), served once per corpus
+    centroids = serve_once(spark, "topic_index", sf_dir, "embeddings", train)
     asg = ann.ivf_assign(emb, centroids, "vec_id", "embedding").select(
         F.col("id").alias("doc_id"), F.col("cell").cast("long").alias("cell")
     )
@@ -9807,8 +9656,8 @@ def semdedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     incoming batch; the originals the master whose cell assignments
     already exist (built here as the stored-state stand-in, exactly
     like `knn_graph_incremental`'s master graph). The k-means index
-    (derived cell count + centroids, `_SEMDEDUP_INDEX_CACHE` — the
-    SAME index `semdedup_kmeans` serves) is frozen across ingests
+    (derived cell count + centroids, `_semdedup_index` — the SAME
+    index `semdedup_kmeans` serves) is frozen across ingests
     and re-derived only at compaction.
 
     The incremental step costs ∝ BATCH: a shuffle-free broadcast
@@ -9826,17 +9675,8 @@ def semdedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     `semdedup_kmeans`'s schema restricted to the ingest.
     """
     corpus = _vector_corpus(spark, sf_dir)
-    key = _ivf_cache_key(sf_dir)
-    cached = _SEMDEDUP_INDEX_CACHE.get(key)
-    if cached is not None:
-        n_cells, centroids = cached
-    else:
-        n_cells = max(1, math.ceil(corpus.count() / SEMDEDUP_TARGET_CELL))
-        centroids = ann.ivf_train(corpus, n_cells=n_cells)
-        _SEMDEDUP_INDEX_CACHE[key] = (n_cells, centroids)
+    centroids = _semdedup_index(spark, sf_dir, corpus)
     from pyspark import StorageLevel
-
-    from ..cacheutil import track_persisted
 
     asg = track_persisted(
         ann.ivf_assign(corpus, centroids, "vec_id", "embedding")
@@ -9894,8 +9734,6 @@ def contrastive_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     neg_cos, neg_rank).
     """
     from pyspark import StorageLevel
-
-    from ..cacheutil import track_persisted
 
     # r10: the LSH pair frame feeds both symmetric-union branches,
     # and the union feeds the best-positive window AND the negative
@@ -10195,8 +10033,6 @@ def doremi_mixture_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark import StorageLevel
 
-    from ..cacheutil import track_persisted
-
     dt0, _, _ = _doremi_base(spark, sf_dir)
     # r11 (VERDICT r10 #5): hash-partition the (dom, token) stats by
     # tok ONCE before persisting — the per-round vocab-grain
@@ -10379,8 +10215,6 @@ def quality_ablation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     fcols = [f"f{i}" for i in range(len(_GOPHER_ABLATION_RULES))]
     from pyspark import StorageLevel
-
-    from ..cacheutil import track_persisted
 
     # r10: nf feeds THREE consumers (the stack unpivot, the 'any'
     # union branch, and the totals agg) — un-persisted, each re-ran
@@ -10959,8 +10793,6 @@ def term_pmi_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark import StorageLevel
 
-    from ..cacheutil import track_persisted
-
     docs = load_table(spark, sf_dir, "documents")
     # one tokenize pass feeds THREE consumers (pair explode, unigram
     # counts, corpus totals) — persist it or each re-scans and
@@ -11265,8 +11097,6 @@ def link_prediction_aa(spark: SparkSession, sf_dir: str) -> DataFrame:
     Returns (node_a, node_b, n_common, aa_score, rank).
     """
     from pyspark import StorageLevel
-
-    from ..cacheutil import track_persisted
 
     g = knn_graph(spark, sf_dir)
     edges = track_persisted(
@@ -11791,8 +11621,6 @@ def node_jaccard_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Returns (node_a, node_b, n_common, jaccard, is_edge, rank).
     """
     from pyspark import StorageLevel
-
-    from ..cacheutil import track_persisted
 
     g = knn_graph(spark, sf_dir)
     edges = track_persisted(
@@ -12437,33 +12265,6 @@ MUTUAL_INFORMATION_FEATURES_SQL = _mi_features_sql()
 JSONL_CORRUPT_MOD = 37
 
 
-def _staging_dir(sf_dir: str, table: str, prefix: str) -> str:
-    """Per-corpus staging path derived from the SOURCE parquet's
-    identity, not its basename: a short hash of the absolute sf_dir
-    plus the parquet's (mtime, size) fingerprint — the
-    `_ivf_cache_key` convention applied to on-disk staging (r7
-    advice #1). A regenerated corpus at the same path gets a fresh
-    dir instead of silently serving stale staged data, and two
-    corpora sharing a basename under different parents can never
-    collide."""
-    import hashlib
-    import os
-    import tempfile
-
-    path = os.path.join(sf_dir, f"{table}.parquet")
-    try:
-        st = os.stat(path)
-        # nanosecond mtime (r9, ADVICE): whole-second truncation
-        # would serve stale staged data for a corpus regenerated
-        # within the same second at identical size — match the
-        # `_ivf_cache_key` full-resolution convention.
-        fp = f"{st.st_mtime_ns}_{st.st_size}"
-    except OSError:
-        fp = "0_0"
-    h = hashlib.sha256(os.path.abspath(sf_dir).encode()).hexdigest()[:12]
-    return os.path.join(tempfile.gettempdir(), f"{prefix}_v2_{h}_{fp}")
-
-
 def jsonl_ingest_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Raw-feed JSONL ingestion THROUGH the registry (promotes the
     tests-only `sources/ingest.py` path to an oracle-checked query):
@@ -12485,40 +12286,21 @@ def jsonl_ingest_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     Returns (source, n_rows, n_chars_sum) per source, plus one
     ('__quarantine__', torn-line count, 0) row.
     """
-    import os
-    import uuid
-
     from ..sources import ingest
 
     docs = load_table(spark, sf_dir, "documents")
-    out_dir = _staging_dir(sf_dir, "documents", "jsonl_ingest")
-    if not os.path.exists(out_dir):
-        line = F.to_json(
-            F.struct("doc_id", "lang", "source", "n_chars", "text")
-        )
-        torn = F.when(
-            F.col("doc_id") % JSONL_CORRUPT_MOD == 0,
-            F.expr(
-                "substring(j, 1, CAST(floor(length(j) / 2) AS INT))"
-            ),
-        ).otherwise(F.col("j"))
-        # build under a unique temp name, then one atomic rename —
-        # a concurrent reader can never see a half-committed drop
-        # (the master_roundtrip_counts staging contract; r7 advice
-        # #1 flagged the old exists-check + mode('ignore') write)
-        build = f"{out_dir}_build_{uuid.uuid4().hex[:8]}"
-        docs.select("doc_id", line.alias("j")).select(
-            torn.alias("value")
-        ).write.mode("overwrite").text(build)
-        try:
-            os.rename(build, out_dir)
-        except OSError:
-            # lost the race to a concurrent builder — theirs wins,
-            # but reap our build dir (r9, ADVICE: a full text copy
-            # of the corpus would otherwise leak per collision)
-            import shutil
-
-            shutil.rmtree(build, ignore_errors=True)
+    line = F.to_json(F.struct("doc_id", "lang", "source", "n_chars", "text"))
+    torn = F.when(
+        F.col("doc_id") % JSONL_CORRUPT_MOD == 0,
+        F.expr("substring(j, 1, CAST(floor(length(j) / 2) AS INT))"),
+    ).otherwise(F.col("j"))
+    out_dir = stage(
+        sf_dir, "documents", "jsonl_ingest",
+        lambda build: docs.select("doc_id", line.alias("j"))
+        .select(torn.alias("value"))
+        .write.mode("overwrite")
+        .text(build),
+    )
     from pyspark.sql.types import (
         LongType,
         StringType,
@@ -12870,34 +12652,18 @@ def master_roundtrip_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     Returns (unit, key, n_facts): one row per (page_view, url) plus
     one ('equiv', 'ALL') row.
     """
-    import os
-    import uuid
-
     from ..schema import equiv_facts, pageview_facts
     from ..sources.master_dataset import MasterDataset
     from .swa import _equiv_edges
 
-    out = _staging_dir(sf_dir, "events", "master")
-    if not os.path.exists(out):
-        build = f"{out}_build_{uuid.uuid4().hex[:8]}"
+    def write(build: str) -> None:
         md = MasterDataset(build)
-        events = load_table(spark, sf_dir, "events")
-        md.ingest(pageview_facts(events))
+        md.ingest(pageview_facts(load_table(spark, sf_dir, "events")))
         md.ingest(
-            equiv_facts(
-                _equiv_edges(spark, sf_dir), "src", "dst", F.lit(0)
-            )
+            equiv_facts(_equiv_edges(spark, sf_dir), "src", "dst", F.lit(0))
         )
-        try:
-            os.rename(build, out)
-        except OSError:
-            # lost the race to a concurrent builder — theirs wins,
-            # but reap our build dir (r9, ADVICE: the staged copy
-            # would otherwise leak per collision/rerun)
-            import shutil
 
-            shutil.rmtree(build, ignore_errors=True)
-    store = MasterDataset(out)
+    store = MasterDataset(stage(sf_dir, "events", "master", write))
     facts = store.read(spark)
     return facts.groupBy(
         "unit",
@@ -12945,21 +12711,12 @@ def training_export_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side read-back agg; min/max/count catch loss/duplication,
     the row_index identity catches ordering regressions.
     """
-    import os
-    import uuid
-
     from ..sources.training_export import export_training_shards
 
-    out = _staging_dir(sf_dir, "documents", "train_export")
-    if not os.path.exists(out):
-        build = f"{out}_build_{uuid.uuid4().hex[:8]}"
-        export_training_shards(corpus_shuffle(spark, sf_dir), build)
-        try:
-            os.rename(build, out)
-        except OSError:
-            import shutil
-
-            shutil.rmtree(build, ignore_errors=True)
+    out = stage(
+        sf_dir, "documents", "train_export",
+        lambda build: export_training_shards(corpus_shuffle(spark, sf_dir), build),
+    )
     back = spark.read.parquet(out).select(
         F.col("shard").cast("int").alias("shard"),
         "pos",
@@ -13396,8 +13153,6 @@ def embedding_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark import StorageLevel
 
-    from ..cacheutil import track_persisted
-
     vc = _vector_corpus(spark, sf_dir)
     is_eval = (F.col("vec_id") < DUP_SEED_OFFSET) & (
         F.col("vec_id") % DECON_EVAL_MOD == 0
@@ -13575,8 +13330,6 @@ def ppr_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from pyspark import StorageLevel
 
-    from ..cacheutil import track_persisted
-
     edges = knn_graph(spark, sf_dir).select("src", "dst")
     edges = track_persisted(edges.persist(StorageLevel.MEMORY_AND_DISK))
     deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
@@ -13670,22 +13423,13 @@ def orc_roundtrip_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     pushdown intact — ORC is a native vectorized source) + one
     combinable rollup. Returns (source, n_rows, n_chars_sum).
     """
-    import os
-    import uuid
-
     docs = load_table(spark, sf_dir, "documents")
-    out = _staging_dir(sf_dir, "documents", "orc_rt")
-    if not os.path.exists(out):
-        build = f"{out}_build_{uuid.uuid4().hex[:8]}"
-        docs.write.mode("overwrite").option(
-            "compression", "zstd"
-        ).orc(build)
-        try:
-            os.rename(build, out)
-        except OSError:
-            import shutil
-
-            shutil.rmtree(build, ignore_errors=True)
+    out = stage(
+        sf_dir, "documents", "orc_rt",
+        lambda build: docs.write.mode("overwrite")
+        .option("compression", "zstd")
+        .orc(build),
+    )
     back = spark.read.orc(out)
     return back.groupBy("source").agg(
         F.count(F.lit(1)).cast("long").alias("n_rows"),
@@ -13729,30 +13473,23 @@ def csv_ingest_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     Returns (source, n_rows, n_chars_sum) per source plus one
     ('__quarantine__', mangled-row count, 0) row.
     """
-    import os
-    import uuid
-
     from ..sources import ingest
 
     docs = load_table(spark, sf_dir, "documents")
-    out_dir = _staging_dir(sf_dir, "documents", "csv_ingest")
-    if not os.path.exists(out_dir):
-        key = F.when(
-            F.col("doc_id") % CSV_CORRUPT_MOD == 0,
-            F.concat(F.lit("X"), F.col("doc_id").cast("string")),
-        ).otherwise(F.col("doc_id").cast("string"))
-        line = F.concat_ws(
-            ",", key, F.col("lang"), F.col("source"),
-            F.col("n_chars").cast("string"), F.col("text"),
-        )
-        build = f"{out_dir}_build_{uuid.uuid4().hex[:8]}"
-        docs.select(line.alias("value")).write.mode("overwrite").text(build)
-        try:
-            os.rename(build, out_dir)
-        except OSError:
-            import shutil
-
-            shutil.rmtree(build, ignore_errors=True)
+    key = F.when(
+        F.col("doc_id") % CSV_CORRUPT_MOD == 0,
+        F.concat(F.lit("X"), F.col("doc_id").cast("string")),
+    ).otherwise(F.col("doc_id").cast("string"))
+    line = F.concat_ws(
+        ",", key, F.col("lang"), F.col("source"),
+        F.col("n_chars").cast("string"), F.col("text"),
+    )
+    out_dir = stage(
+        sf_dir, "documents", "csv_ingest",
+        lambda build: docs.select(line.alias("value"))
+        .write.mode("overwrite")
+        .text(build),
+    )
     from pyspark.sql.types import (
         LongType,
         StringType,

@@ -11,13 +11,12 @@ in insertion order, so the prefix is kept 100% oracle-backed and is
 rotated each round (changed-first, then oldest-evidence-next —
 VERDICT r5 #6). The cumulative round-driver union r1-r9 covers all
 269 carried-over entries, none failing its latest check (VERDICT
-r9). The r10 prefix leads with the 8 NEW r10 entries, then the 6
-queries whose plan code changed this round, then ALL 15
-oracle-backed streaming queries (plans/speed.py was refactored to
-expose static audit twins), then the oldest-evidence r4-vintage
-fill. See the inline comments at the list, which are the
-authoritative description. Nothing about a query's semantics
-depends on its position.
+r9). The current prefix leads with the entries whose code changed
+most recently (the r11 iterative loops, then the entries served
+from or staged by `cacheutil`), then the entries earlier rotations
+pushed past the window. See the inline comments at the list, which
+are the authoritative description. Nothing about a query's
+semantics depends on its position.
 
 Every oracle-backed query has ALSO been verified locally by
 tools/driver_check.py full sweeps (plain stock session) at sf0.01;
@@ -37,78 +36,71 @@ QueryFn = Callable[[SparkSession, str], DataFrame]
 
 #: (name, callable, oracle SQL | None), in driver-sample order.
 _ENTRIES: list[tuple[str, QueryFn, str | None]] = [
-    # -- r10 prefix. ORDER (changed-first, then
-    #    oldest-evidence-next — the house rotation): positions 1-8
-    #    are the eight NEW r10 entries (never driver-sampled);
-    #    9-21 are the queries whose plan code changed this round
-    #    (unigram_logprob exact-BIGINT ln fold, cuped_abtest
-    #    nullif/greatest guards, weighted_sample_es ln(0) clamp,
-    #    pareto_user_concentration via the size-gated
-    #    two_pass_ranks fast path, events_near_pairs(+_capped)
-    #    re-planned onto the merge-count kernel, and — optimization
-    #    sessions — dedup_corpus_final/keep_best/eval_pr served from
-    #    the once-per-corpus _DEDUP_CC_CACHE verdict table plus
-    #    user_id_normalization/normalized_events/
-    #    uniques_over_time_normalized/cross_device_sessions served
-    #    from _EQUIV_MAP_CACHE); 22-36 are ALL 15 oracle-backed
-    #    streaming queries (plans/speed.py was refactored this round
-    #    to expose static audit twins through the same builder code —
-    #    changed-first applies), ordered by oldest last-green round;
-    #    37-50 are the first 14 of the 26 remaining r4-vintage
-    #    entries (the cache-changed dedup_cluster_stats and
-    #    dedup_weighted_sample already sit at 37 and 2). The prefix
-    #    growth pushes 13 entries past the 50-entry driver window:
-    #    11 r4-vintage (ann_recall_eval, tfidf_cosine_pairs,
-    #    bm25_search, pca_power_iteration, dp_noisy_counts,
-    #    build_term_index, table_profile_events,
-    #    multimodal_phash_dedup, skew_salted_quantity,
-    #    lang_id_confusion, zorder_layout_keys, at 51-61) and 2
-    #    r5-vintage (top_users_by_event_type,
-    #    lambda_merged_uniques_hll, at 62-63) — they keep their
-    #    old driver evidence plus this session's full local sweep,
-    #    and MUST lead the r11 prefix (changed-first permitting).
+    # -- r12 prefix. ORDER (changed-first, then oldest-evidence-next
+    #    — the house rotation): 1-3 are the entries r11 changed
+    #    (doremi_mixture_weights, and the two quality-logit loops
+    #    that size their iteration frame with
+    #    skew.narrow_for_iteration); 4-20 are the served entries and
+    #    their cold-build twins whose result store moved onto
+    #    cacheutil.serve_once (twins first, then the served entries
+    #    and the PQ/semdedup/topic index readers); 21-33 are the 13
+    #    entries the r10 prefix pushed past position 50 (11
+    #    r4-vintage, 2 r5-vintage); 34-38 are the one-time staging
+    #    queries that moved onto cacheutil.stage; 39-50 are the first
+    #    12 of the 15 streaming queries (their file-stream sources
+    #    moved onto cacheutil.stage too), oldest last-green first.
+    #    Pushed past the 50-entry driver window, and due to lead the
+    #    next prefix: the last 3 streaming queries at 51-53, then the
+    #    rest of the r11 prefix at 54-79 (the r10-new entries, the
+    #    r10-changed plans, the dedup-verdict and user-ID-mapping
+    #    consumers, and the r4-vintage fill), in their prior order.
     #    Nothing about a query's semantics depends on its position.
-    # -- NEW r11 (never sampled): cold-build twins of the
-    #    build-once/serve-many index caches (VERDICT r10 #1 — the
-    #    bench must charge cache builds). Each computes the SAME
-    #    output as its served counterpart (same oracle SQL) but
-    #    bypasses the result cache entirely, so its bench row is the
-    #    honest cold compute on every rep.
+    ("doremi_mixture_weights", llm.doremi_mixture_weights, llm.DOREMI_MIXTURE_WEIGHTS_SQL),
+    ("quality_logit_train", llm.quality_logit_train, llm.QUALITY_LOGIT_TRAIN_SQL),
+    ("quality_logit_holdout_eval", llm.quality_logit_holdout_eval, llm.QUALITY_LOGIT_HOLDOUT_EVAL_SQL),
+    # -- cold-build twins (r11): each runs the build its served
+    #    counterpart hands to cacheutil.serve_once (same output, same
+    #    oracle SQL) without touching the store, so its bench row is
+    #    the cold compute on every rep
     ("dedup_corpus_final_build", llm.dedup_corpus_final_build, llm.DEDUP_CORPUS_FINAL_SQL),
     ("user_id_normalization_build", swa.user_id_normalization_build, swa.USER_ID_NORMALIZATION_SQL),
     ("knn_graph_build", llm.knn_graph_build, llm.KNN_GRAPH_SQL),
     ("ann_cosine_topk_build", llm.ann_cosine_topk_build, llm.ANN_COSINE_TOPK_SQL),
     ("ann_ivf_build", llm.ann_ivf_build, llm.ANN_IVF_SQL),
     ("semdedup_hierarchical_build", llm.semdedup_hierarchical_build, llm.SEMDEDUP_HIERARCHICAL_SQL),
-    # -- NEW r10 (never sampled)
-    ("holt_backtest_model_select", advanced.holt_backtest_model_select, advanced.HOLT_BACKTEST_MODEL_SELECT_SQL),
-    ("dedup_weighted_sample", llm.dedup_weighted_sample, llm.DEDUP_WEIGHTED_SAMPLE_SQL),
-    ("streaming_kmv_uniques", speed.streaming_kmv_uniques, speed.STREAMING_KMV_UNIQUES_SQL),
-    ("perplexity_band_prune", llm.perplexity_band_prune, llm.PERPLEXITY_BAND_PRUNE_SQL),
-    ("survival_km_ship_lag", advanced.survival_km_ship_lag, advanced.SURVIVAL_KM_SHIP_LAG_SQL),
-    ("uniques_weekly_kmv_union", llm.uniques_weekly_kmv_union, llm.UNIQUES_WEEKLY_KMV_UNION_SQL),
-    ("training_export_roundtrip", llm.training_export_roundtrip, llm.TRAINING_EXPORT_ROUNDTRIP_SQL),
-    ("audience_overlap_sketch", llm.audience_overlap_sketch, llm.AUDIENCE_OVERLAP_SKETCH_SQL),
-    # -- r10-changed plan code
-    ("unigram_logprob", llm.unigram_logprob, llm.UNIGRAM_LOGPROB_SQL),
-    ("cuped_abtest", advanced.cuped_abtest, advanced.CUPED_ABTEST_SQL),
-    ("weighted_sample_es", llm.weighted_sample_es, llm.WEIGHTED_SAMPLE_ES_SQL),
-    ("pareto_user_concentration", advanced.pareto_user_concentration, advanced.PARETO_USER_CONCENTRATION_SQL),
-    ("events_near_pairs", advanced.events_near_pairs, advanced.EVENTS_NEAR_PAIRS_SQL),
-    ("events_near_pairs_capped", advanced.events_near_pairs_capped, advanced.EVENTS_NEAR_PAIRS_CAPPED_SQL),
-    # -- changed in the optimization sessions: the LSH→CC verdict
-    #    table is now built once per (session, corpus) and served
-    #    from _DEDUP_CC_CACHE (results bit-identical; oracle-proved)
+    # -- served once per (application, input fingerprint)
     ("dedup_corpus_final", llm.dedup_corpus_final, llm.DEDUP_CORPUS_FINAL_SQL),
-    ("dedup_keep_best", llm.dedup_keep_best, llm.DEDUP_KEEP_BEST_SQL),
-    ("dedup_eval_pr", llm.dedup_eval_pr, llm.DEDUP_EVAL_PR_SQL),
-    #    ...and the equiv-graph user-ID mapping, likewise served
-    #    from _EQUIV_MAP_CACHE (results bit-identical; oracle-proved)
     ("user_id_normalization", swa.user_id_normalization, swa.USER_ID_NORMALIZATION_SQL),
-    ("normalized_events", swa.normalized_events, swa.NORMALIZED_EVENTS_SQL),
-    ("uniques_over_time_normalized", swa.uniques_over_time_normalized, swa.UNIQUES_NORMALIZED_SQL),
-    ("cross_device_sessions", advanced.cross_device_sessions, advanced.CROSS_DEVICE_SESSIONS_SQL),
-    # -- all oracle-backed streaming queries (speed.py refactor), oldest first
+    ("knn_graph", llm.knn_graph, llm.KNN_GRAPH_SQL),
+    ("ann_cosine_topk", llm.ann_cosine_topk, llm.ANN_COSINE_TOPK_SQL),
+    ("ann_ivf", llm.ann_ivf, llm.ANN_IVF_SQL),
+    ("semdedup_hierarchical", llm.semdedup_hierarchical, llm.SEMDEDUP_HIERARCHICAL_SQL),
+    ("embedding_pq", llm.embedding_pq_flat, llm.EMBEDDING_PQ_FLAT_SQL),
+    ("ann_pq", llm.ann_pq, llm.ANN_PQ_SQL),
+    ("ann_ivf_pq", llm.ann_ivf_pq, llm.ANN_IVF_PQ_SQL),
+    ("semdedup_incremental", llm.semdedup_incremental, llm.SEMDEDUP_INCREMENTAL_SQL),
+    ("topic_cluster_mix", llm.topic_cluster_mix, llm.TOPIC_CLUSTER_MIX_SQL),
+    # -- pushed past the window by the r10 prefix growth
+    ("ann_recall_eval", llm.ann_recall_eval, llm.ANN_RECALL_EVAL_SQL),
+    ("tfidf_cosine_pairs", llm.tfidf_cosine_pairs, llm.TFIDF_COSINE_PAIRS_SQL),
+    ("bm25_search", llm.bm25_search, llm.BM25_SEARCH_SQL),
+    ("pca_power_iteration", llm.pca_power_iteration, llm.PCA_POWER_ITERATION_SQL),
+    ("dp_noisy_counts", llm.dp_noisy_counts, llm.DP_NOISY_COUNTS_SQL),
+    ("build_term_index", llm.build_term_index, llm.BUILD_TERM_INDEX_SQL),
+    ("table_profile_events", llm.table_profile_events, llm.TABLE_PROFILE_EVENTS_SQL),
+    ("multimodal_phash_dedup", llm.multimodal_phash_dedup, llm.MULTIMODAL_PHASH_DEDUP_SQL),
+    ("skew_salted_quantity", llm.skew_salted_quantity, llm.SKEW_SALTED_QUANTITY_SQL),
+    ("lang_id_confusion", llm.lang_id_confusion, llm.LANG_ID_CONFUSION_SQL),
+    ("zorder_layout_keys", advanced.zorder_layout_keys, advanced.ZORDER_LAYOUT_KEYS_SQL),
+    ("top_users_by_event_type", tpch.top_users_by_event_type, tpch.TOP_USERS_SQL),
+    ("lambda_merged_uniques_hll", speed.lambda_merged_uniques_hll, speed.LAMBDA_MERGED_UNIQUES_SQL),
+    # -- one-time staging via cacheutil.stage
+    ("jsonl_ingest_quarantine", llm.jsonl_ingest_quarantine, llm.JSONL_INGEST_QUARANTINE_SQL),
+    ("master_roundtrip_counts", llm.master_roundtrip_counts, llm.MASTER_ROUNDTRIP_COUNTS_SQL),
+    ("training_export_roundtrip", llm.training_export_roundtrip, llm.TRAINING_EXPORT_ROUNDTRIP_SQL),
+    ("orc_roundtrip_counts", llm.orc_roundtrip_counts, llm.ORC_ROUNDTRIP_COUNTS_SQL),
+    ("csv_ingest_quarantine", llm.csv_ingest_quarantine, llm.CSV_INGEST_QUARANTINE_SQL),
+    # -- streaming queries, staged sources via cacheutil.stage
     ("streaming_top_pages_hourly", speed.streaming_top_pages_hourly, speed.STREAMING_TOP_PAGES_SQL),
     ("streaming_ingest_dedup", speed.streaming_ingest_dedup, llm.DEDUP_INCREMENTAL_SQL),
     ("streaming_bounce_rate_native", speed.streaming_bounce_rate_native, speed.STREAMING_BOUNCE_RATE_NATIVE_SQL),
@@ -121,10 +113,29 @@ _ENTRIES: list[tuple[str, QueryFn, str | None]] = [
     ("streaming_enriched_counts", speed.streaming_enriched_counts, speed.STREAMING_ENRICHED_COUNTS_SQL),
     ("streaming_uniques_hourly_hll", speed.streaming_uniques_hourly_hll, speed.STREAMING_UNIQUES_HLL_SQL),
     ("streaming_bounce_rate", speed.streaming_bounce_rate, speed.STREAMING_BOUNCE_RATE_SQL),
+    # -- 51+: pushed past the window this round, then the rest, all
+    #    in prior relative order
     ("streaming_ngram_novelty", speed.streaming_ngram_novelty, llm.STREAMING_NGRAM_NOVELTY_SQL),
     ("streaming_cusum_monitor", speed.streaming_cusum_monitor, speed.STREAMING_CUSUM_MONITOR_SQL),
     ("streaming_psi_monitor", speed.streaming_psi_monitor, speed.STREAMING_PSI_MONITOR_SQL),
-    # -- oldest-evidence fill: the 26 remaining r4-vintage entries
+    ("holt_backtest_model_select", advanced.holt_backtest_model_select, advanced.HOLT_BACKTEST_MODEL_SELECT_SQL),
+    ("dedup_weighted_sample", llm.dedup_weighted_sample, llm.DEDUP_WEIGHTED_SAMPLE_SQL),
+    ("streaming_kmv_uniques", speed.streaming_kmv_uniques, speed.STREAMING_KMV_UNIQUES_SQL),
+    ("perplexity_band_prune", llm.perplexity_band_prune, llm.PERPLEXITY_BAND_PRUNE_SQL),
+    ("survival_km_ship_lag", advanced.survival_km_ship_lag, advanced.SURVIVAL_KM_SHIP_LAG_SQL),
+    ("uniques_weekly_kmv_union", llm.uniques_weekly_kmv_union, llm.UNIQUES_WEEKLY_KMV_UNION_SQL),
+    ("audience_overlap_sketch", llm.audience_overlap_sketch, llm.AUDIENCE_OVERLAP_SKETCH_SQL),
+    ("unigram_logprob", llm.unigram_logprob, llm.UNIGRAM_LOGPROB_SQL),
+    ("cuped_abtest", advanced.cuped_abtest, advanced.CUPED_ABTEST_SQL),
+    ("weighted_sample_es", llm.weighted_sample_es, llm.WEIGHTED_SAMPLE_ES_SQL),
+    ("pareto_user_concentration", advanced.pareto_user_concentration, advanced.PARETO_USER_CONCENTRATION_SQL),
+    ("events_near_pairs", advanced.events_near_pairs, advanced.EVENTS_NEAR_PAIRS_SQL),
+    ("events_near_pairs_capped", advanced.events_near_pairs_capped, advanced.EVENTS_NEAR_PAIRS_CAPPED_SQL),
+    ("dedup_keep_best", llm.dedup_keep_best, llm.DEDUP_KEEP_BEST_SQL),
+    ("dedup_eval_pr", llm.dedup_eval_pr, llm.DEDUP_EVAL_PR_SQL),
+    ("normalized_events", swa.normalized_events, swa.NORMALIZED_EVENTS_SQL),
+    ("uniques_over_time_normalized", swa.uniques_over_time_normalized, swa.UNIQUES_NORMALIZED_SQL),
+    ("cross_device_sessions", advanced.cross_device_sessions, advanced.CROSS_DEVICE_SESSIONS_SQL),
     ("dedup_cluster_stats", llm.dedup_cluster_stats, llm.DEDUP_CLUSTER_STATS_SQL),
     ("bigram_logprob", llm.bigram_logprob, llm.BIGRAM_LOGPROB_SQL),
     ("dedup_semantic_final", llm.dedup_semantic_final, llm.DEDUP_SEMANTIC_FINAL_SQL),
@@ -139,23 +150,6 @@ _ENTRIES: list[tuple[str, QueryFn, str | None]] = [
     ("gopher_repetition_rules", llm.gopher_repetition_rules, llm.GOPHER_REPETITION_RULES_SQL),
     ("char_entropy", llm.char_entropy, llm.CHAR_ENTROPY_SQL),
     ("heavy_hitters_cms", llm.heavy_hitters_cms, llm.HEAVY_HITTERS_CMS_SQL),
-    ("ann_recall_eval", llm.ann_recall_eval, llm.ANN_RECALL_EVAL_SQL),
-    ("tfidf_cosine_pairs", llm.tfidf_cosine_pairs, llm.TFIDF_COSINE_PAIRS_SQL),
-    ("bm25_search", llm.bm25_search, llm.BM25_SEARCH_SQL),
-    ("pca_power_iteration", llm.pca_power_iteration, llm.PCA_POWER_ITERATION_SQL),
-    ("dp_noisy_counts", llm.dp_noisy_counts, llm.DP_NOISY_COUNTS_SQL),
-    ("build_term_index", llm.build_term_index, llm.BUILD_TERM_INDEX_SQL),
-    ("table_profile_events", llm.table_profile_events, llm.TABLE_PROFILE_EVENTS_SQL),
-    ("multimodal_phash_dedup", llm.multimodal_phash_dedup, llm.MULTIMODAL_PHASH_DEDUP_SQL),
-    ("skew_salted_quantity", llm.skew_salted_quantity, llm.SKEW_SALTED_QUANTITY_SQL),
-    ("lang_id_confusion", llm.lang_id_confusion, llm.LANG_ID_CONFUSION_SQL),
-    ("zorder_layout_keys", advanced.zorder_layout_keys, advanced.ZORDER_LAYOUT_KEYS_SQL),
-    # -- oldest r5-vintage
-    ("top_users_by_event_type", tpch.top_users_by_event_type, tpch.TOP_USERS_SQL),
-    ("lambda_merged_uniques_hll", speed.lambda_merged_uniques_hll, speed.LAMBDA_MERGED_UNIQUES_SQL),
-    # -- 51+: remaining entries, prior relative order; after the
-    #    r10 prefix lands, cumulative round-driver union = all 271
-    #    entries with the OLDEST last-green evidence being r5.
     ("cusum_changepoint", advanced.cusum_changepoint, advanced.CUSUM_CHANGEPOINT_SQL),
     ("zipf_slope_fit", llm.zipf_slope_fit, llm.ZIPF_SLOPE_FIT_SQL),
     ("boilerplate_ngrams", llm.boilerplate_ngrams, llm.BOILERPLATE_NGRAMS_SQL),
@@ -163,16 +157,12 @@ _ENTRIES: list[tuple[str, QueryFn, str | None]] = [
     ("srm_check", advanced.srm_check, advanced.SRM_CHECK_SQL),
     ("mrr_eval", llm.mrr_eval, llm.MRR_EVAL_SQL),
     ("ppr_knn_graph", llm.ppr_knn_graph, llm.PPR_KNN_GRAPH_SQL),
-    ("orc_roundtrip_counts", llm.orc_roundtrip_counts, llm.ORC_ROUNDTRIP_COUNTS_SQL),
     ("user_id_normalization_incremental", swa.user_id_normalization_incremental, swa.USER_ID_NORMALIZATION_INCREMENTAL_SQL),
-    ("csv_ingest_quarantine", llm.csv_ingest_quarantine, llm.CSV_INGEST_QUARANTINE_SQL),
     ("ewma_backtest_mape", advanced.ewma_backtest_mape, advanced.EWMA_BACKTEST_MAPE_SQL),
     ("kfold_assign", llm.kfold_assign, llm.KFOLD_ASSIGN_SQL),
-    ("quality_logit_holdout_eval", llm.quality_logit_holdout_eval, llm.QUALITY_LOGIT_HOLDOUT_EVAL_SQL),
     ("order_value_quantiles_exact", advanced.order_value_quantiles_exact, advanced.ORDER_VALUE_QUANTILES_EXACT_SQL),
     ("gini_user_concentration", advanced.gini_user_concentration, advanced.GINI_USER_CONCENTRATION_SQL),
     ("hill_tail_index", advanced.hill_tail_index, advanced.HILL_TAIL_INDEX_SQL),
-    ("semdedup_hierarchical", llm.semdedup_hierarchical, llm.SEMDEDUP_HIERARCHICAL_SQL),
     ("chi2_segment_priority", advanced.chi2_segment_priority, advanced.CHI2_SEGMENT_PRIORITY_SQL),
     ("mutual_information_features", llm.mutual_information_features, llm.MUTUAL_INFORMATION_FEATURES_SQL),
     ("revenue_pattern_match", advanced.revenue_pattern_match, advanced.REVENUE_PATTERN_MATCH_SQL),
@@ -185,8 +175,6 @@ _ENTRIES: list[tuple[str, QueryFn, str | None]] = [
     ("join_skew_report", advanced.join_skew_report, advanced.JOIN_SKEW_REPORT_SQL),
     ("touch_attribution", advanced.touch_attribution, advanced.TOUCH_ATTRIBUTION_SQL),
     ("bootstrap_ci_order_value", advanced.bootstrap_ci_order_value, advanced.BOOTSTRAP_CI_ORDER_VALUE_SQL),
-    ("jsonl_ingest_quarantine", llm.jsonl_ingest_quarantine, llm.JSONL_INGEST_QUARANTINE_SQL),
-    ("master_roundtrip_counts", llm.master_roundtrip_counts, llm.MASTER_ROUNDTRIP_COUNTS_SQL),
     ("curriculum_order", llm.curriculum_order, llm.CURRICULUM_ORDER_SQL),
     ("token_budget_mix", llm.token_budget_mix, llm.TOKEN_BUDGET_MIX_SQL),
     ("sequence_packing", llm.sequence_packing, llm.SEQUENCE_PACKING_SQL),
@@ -196,9 +184,6 @@ _ENTRIES: list[tuple[str, QueryFn, str | None]] = [
     ("corpus_drift", llm.corpus_drift, llm.CORPUS_DRIFT_SQL),
     ("multimodal_features", llm.multimodal_features_flat, llm.MULTIMODAL_FEATURES_FLAT_SQL),
     ("embedding_quantize", llm.embedding_quantize_csv, llm.EMBEDDING_QUANTIZE_CSV_SQL),
-    ("embedding_pq", llm.embedding_pq_flat, llm.EMBEDDING_PQ_FLAT_SQL),
-    ("ann_pq", llm.ann_pq, llm.ANN_PQ_SQL),
-    ("ann_ivf_pq", llm.ann_ivf_pq, llm.ANN_IVF_PQ_SQL),
     ("session_paths_topk", advanced.session_paths_topk, advanced.SESSION_PATHS_TOPK_SQL),
     ("term_pmi_pairs", llm.term_pmi_pairs, llm.TERM_PMI_PAIRS_SQL),
     ("link_prediction_aa", llm.link_prediction_aa, llm.LINK_PREDICTION_AA_SQL),
@@ -252,9 +237,6 @@ _ENTRIES: list[tuple[str, QueryFn, str | None]] = [
     ("vocab_coverage", llm.vocab_coverage, llm.VOCAB_COVERAGE_SQL),
     ("corpus_shuffle", llm.corpus_shuffle, llm.CORPUS_SHUFFLE_SQL),
     ("bpe_pair_stats", llm.bpe_pair_stats, llm.BPE_PAIR_STATS_SQL),
-    ("quality_logit_train", llm.quality_logit_train, llm.QUALITY_LOGIT_TRAIN_SQL),
-    ("ann_cosine_topk", llm.ann_cosine_topk, llm.ANN_COSINE_TOPK_SQL),
-    ("knn_graph", llm.knn_graph, llm.KNN_GRAPH_SQL),
     ("packing_efficiency", llm.packing_efficiency, llm.PACKING_EFFICIENCY_SQL),
     ("knn_graph_incremental", llm.knn_graph_incremental, llm.KNN_GRAPH_SQL),
     ("triangle_count_knn", llm.triangle_count_knn, llm.TRIANGLE_COUNT_KNN_SQL),
@@ -274,19 +256,15 @@ _ENTRIES: list[tuple[str, QueryFn, str | None]] = [
     ("user_event_unpivot", advanced.user_event_unpivot, advanced.USER_EVENT_UNPIVOT_SQL),
     ("dq_checks", advanced.dq_checks, advanced.DQ_CHECKS_SQL),
     ("value_histogram", advanced.value_histogram, advanced.VALUE_HISTOGRAM_SQL),
-    ("ann_ivf", llm.ann_ivf, llm.ANN_IVF_SQL),
     ("uniques_over_time_hll", swa.uniques_over_time_hll, swa.UNIQUES_HLL_SQL),
     ("multimodal_decode", llm.multimodal_decode, llm.MULTIMODAL_DECODE_SQL),
     ("stratified_sample", llm.stratified_sample, llm.STRATIFIED_SAMPLE_SQL),
     ("simhash_dup_pairs", llm.simhash_dup_pairs, llm.SIMHASH_DUP_PAIRS_SQL),
     ("chunk_dedup", llm.chunk_dedup, llm.CHUNK_DEDUP_SQL),
     ("doc_chunking", llm.doc_chunking, llm.DOC_CHUNKING_SQL),
-    ("doremi_mixture_weights", llm.doremi_mixture_weights, llm.DOREMI_MIXTURE_WEIGHTS_SQL),
-    ("semdedup_incremental", llm.semdedup_incremental, llm.SEMDEDUP_INCREMENTAL_SQL),
     ("contrastive_pairs", llm.contrastive_pairs, llm.CONTRASTIVE_PAIRS_SQL),
     ("minhash_band_sweep", llm.minhash_band_sweep, llm.MINHASH_BAND_SWEEP_SQL),
     ("ngram_novelty", llm.ngram_novelty, llm.NGRAM_NOVELTY_SQL),
-    ("topic_cluster_mix", llm.topic_cluster_mix, llm.TOPIC_CLUSTER_MIX_SQL),
     ("split_leakage_audit", llm.split_leakage_audit, llm.SPLIT_LEAKAGE_AUDIT_SQL),
     ("quality_logit_pr_curve", llm.quality_logit_pr_curve, llm.QUALITY_LOGIT_PR_CURVE_SQL),
     ("quality_ablation_report", llm.quality_ablation_report, llm.QUALITY_ABLATION_REPORT_SQL),
@@ -390,10 +368,10 @@ AUDIT_PLAN_HOOKS: dict[str, Callable[[SparkSession, str], list[DataFrame]]] = {
     "hits_knn_graph": llm.hits_knn_graph_audit_plans,
     "quality_logit_holdout_eval": llm.quality_logit_holdout_eval_audit_plans,
     # r10 (optimization): the dedup verdict table and the equiv-graph
-    # user-ID mapping are now served from once-per-corpus caches
-    # (localCheckpoint scans), so their build plans — the banded-LSH
-    # pair join / equiv-edge derivation + one CC round each — are
-    # exposed unexecuted here.
+    # user-ID mapping are served once per input table through
+    # cacheutil.serve_once (localCheckpoint scans), so their build
+    # plans — the banded-LSH pair join / equiv-edge derivation + one
+    # CC round each — are exposed unexecuted here.
     "dedup_corpus_final": llm.dedup_corpus_final_audit_plans,
     "user_id_normalization": swa.user_id_normalization_audit_plans,
     # r11: the kNN cold-build twin's registered frame is a checkpoint

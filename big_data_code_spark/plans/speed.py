@@ -19,6 +19,7 @@ import tempfile
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..cacheutil import stage, staging_dir, track_persisted
 from ..functions.timebuckets import epoch_us, us_to_ts
 from ..sources.tables import load_table
 from ..streaming import speed_layer as sl
@@ -42,20 +43,42 @@ def _static_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _events_src(sf_dir: str) -> str:
-    """FileStreamSource needs a *directory*; stage the events
-    parquet into one via symlink (falling back to copy)."""
-    src = os.path.join(sf_dir, "events.parquet")
-    out_dir = os.path.join(
-        tempfile.gettempdir(), f"swa_stream_src_{os.path.basename(sf_dir)}"
-    )
-    link = os.path.join(out_dir, "00.parquet")
-    if not os.path.exists(link):
-        os.makedirs(out_dir, exist_ok=True)
-        try:
-            os.symlink(src, link)
-        except OSError:
-            shutil.copyfile(src, link)
-    return out_dir
+    """FileStreamSource needs a flat *directory* of files (it does not
+    descend into a linked table directory); stage the events parquet
+    file, or each part file of an events table directory, into one
+    via symlink (falling back to copy)."""
+    src = os.path.abspath(os.path.join(sf_dir, "events.parquet"))
+
+    def write(build: str) -> None:
+        os.makedirs(build)
+        files = [src]
+        if os.path.isdir(src):
+            files = sorted(
+                os.path.join(src, f)
+                for f in os.listdir(src)
+                if not f.startswith(("_", "."))
+            )
+        for i, f in enumerate(files):
+            dst = os.path.join(build, f"{i:02d}.parquet")
+            try:
+                os.symlink(f, dst)
+            except OSError:
+                shutil.copyfile(f, dst)
+
+    return stage(sf_dir, "events", "swa_stream_src", write)
+
+
+def _write_chunk(out_dir: str, df: DataFrame, i: int) -> None:
+    """Write ``df`` as the single file ``{i:02d}.parquet`` of a
+    file-stream source directory, with mtime 1_700_000_000 + i —
+    strictly increasing mtimes fix the file-stream batch order."""
+    tmp = os.path.join(out_dir, f"_tmp_{i}")
+    df.coalesce(1).write.mode("overwrite").parquet(tmp)
+    part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
+    dst = os.path.join(out_dir, f"{i:02d}.parquet")
+    os.replace(os.path.join(tmp, part), dst)
+    shutil.rmtree(tmp)
+    os.utime(dst, (1_700_000_000 + i, 1_700_000_000 + i))
 
 
 def streaming_pageviews_hourly(
@@ -162,64 +185,36 @@ def _chunked_events_dir(
     consumers pass larger offsets so the watermark also clears the
     last hour window's END (e.g. (180, 360) for the funnel)."""
     suffix = f"_flush{flush_mins[0]}_{flush_mins[1]}" if flush else ""
-    out_dir = os.path.join(
-        tempfile.gettempdir(),
-        f"swa_stream_{os.path.basename(sf_dir)}_{n_chunks}{suffix}",
-    )
-    # staging is deterministic in (source file, n_chunks, flush) —
-    # reuse an existing staging keyed by the source's fingerprint
-    # instead of re-running the chunk-write jobs every invocation
-    src_stat = os.stat(os.path.join(sf_dir, "events.parquet"))
-    marker = os.path.join(out_dir, "_STAGED")
-    fingerprint = (
-        f"{src_stat.st_mtime}:{src_stat.st_size}:{n_chunks}:{flush}:{flush_mins}"
-    )
-    if os.path.isfile(marker) and open(marker).read() == fingerprint:
-        return out_dir
 
-    events = load_table(spark, sf_dir, "events").select(
-        "event_id",
-        "ts",
-        epoch_us("ts").alias("us"),
-        "user_id",
-        "event_type",
-    )
-    lo, hi = events.select(F.min("us"), F.max("us")).first()
-    step = (hi - lo) // n_chunks + 1
-    shutil.rmtree(out_dir, ignore_errors=True)
-    os.makedirs(out_dir)
-
-    def stage(df: DataFrame, i: int) -> None:
-        tmp = os.path.join(out_dir, f"_tmp_{i}")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-        os.replace(os.path.join(tmp, part), os.path.join(out_dir, f"{i:02d}.parquet"))
-        shutil.rmtree(tmp)
-        # strictly increasing mtimes fix the file-stream batch order
-        os.utime(
-            os.path.join(out_dir, f"{i:02d}.parquet"),
-            (1_700_000_000 + i, 1_700_000_000 + i),
+    def write(build: str) -> None:
+        events = load_table(spark, sf_dir, "events").select(
+            "event_id",
+            "ts",
+            epoch_us("ts").alias("us"),
+            "user_id",
+            "event_type",
         )
-
-    for i in range(n_chunks):
-        stage(
-            events.where(
-                (F.col("us") >= lo + i * step) & (F.col("us") < lo + (i + 1) * step)
-            ).select("event_id", "ts", "user_id", "event_type"),
-            i,
-        )
-    if flush:
-        for j, mins in enumerate(flush_mins):
+        lo, hi = events.select(F.min("us"), F.max("us")).first()
+        step = (hi - lo) // n_chunks + 1
+        for i in range(n_chunks):
+            _write_chunk(
+                build,
+                events.where(
+                    (F.col("us") >= lo + i * step)
+                    & (F.col("us") < lo + (i + 1) * step)
+                ).select("event_id", "ts", "user_id", "event_type"),
+                i,
+            )
+        for j, mins in enumerate(flush_mins if flush else ()):
             sentinel = spark.range(1).select(
                 F.lit(-(j + 1)).cast("long").alias("event_id"),
                 us_to_ts(F.lit(hi + mins * 60_000_000)).cast("timestamp_ntz").alias("ts"),
                 F.lit(-(j + 1)).cast("long").alias("user_id"),
                 F.lit(FLUSH_DOMAIN).alias("event_type"),
             )
-            stage(sentinel, n_chunks + j)
-    with open(marker, "w") as f:
-        f.write(fingerprint)
-    return out_dir
+            _write_chunk(build, sentinel, n_chunks + j)
+
+    return stage(sf_dir, "events", f"swa_stream_{n_chunks}{suffix}", write)
 
 
 def streaming_bounce_rate(
@@ -551,9 +546,7 @@ def lambda_merged_pageviews(
     )
 
     recent = events.where(F.col("ts") > cutoff)
-    speed_src = os.path.join(
-        tempfile.gettempdir(), f"swa_speed_recent_{os.path.basename(sf_dir)}"
-    )
+    speed_src = staging_dir(sf_dir, "events", "swa_speed_recent")
     (
         recent.select("event_id", "ts", "user_id", "event_type")
         .write.mode("overwrite")
@@ -634,37 +627,14 @@ def _chunked_docs_dir(spark: SparkSession, sf_dir: str, n_chunks: int = 3) -> st
     (split by doc_id % n) so a file stream ingests them as
     deterministic micro-batches. Fingerprint-cached like
     `_chunked_events_dir`."""
-    out_dir = os.path.join(
-        tempfile.gettempdir(),
-        f"swa_docs_stream_{os.path.basename(sf_dir)}_{n_chunks}",
-    )
-    src_stat = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    marker = os.path.join(out_dir, "_STAGED")
-    fingerprint = f"{src_stat.st_mtime}:{src_stat.st_size}:{n_chunks}"
-    if os.path.isfile(marker) and open(marker).read() == fingerprint:
-        return out_dir
-
     from .llm import _corpus
 
-    batch = _corpus(spark, sf_dir).where(F.col("doc_id") >= 1_000_000)
-    shutil.rmtree(out_dir, ignore_errors=True)
-    os.makedirs(out_dir)
-    for i in range(n_chunks):
-        tmp = os.path.join(out_dir, f"_tmp_{i}")
-        batch.where(F.col("doc_id") % n_chunks == i).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(tmp)
-        part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-        os.replace(os.path.join(tmp, part), os.path.join(out_dir, f"{i:02d}.parquet"))
-        shutil.rmtree(tmp)
-        os.utime(
-            os.path.join(out_dir, f"{i:02d}.parquet"),
-            (1_700_000_000 + i, 1_700_000_000 + i),
-        )
-    with open(marker, "w") as f:
-        f.write(fingerprint)
-    return out_dir
+    def write(build: str) -> None:
+        batch = _corpus(spark, sf_dir).where(F.col("doc_id") >= 1_000_000)
+        for i in range(n_chunks):
+            _write_chunk(build, batch.where(F.col("doc_id") % n_chunks == i), i)
 
+    return stage(sf_dir, "documents", f"swa_docs_stream_{n_chunks}", write)
 
 
 def _prune_stale_sinks(prefix: str) -> None:
@@ -753,7 +723,6 @@ def streaming_ingest_dedup(
 
     from pyspark import StorageLevel
 
-    from ..cacheutil import track_persisted
     from ..operators import dedup as dd
     from .llm import _corpus
 
@@ -873,36 +842,12 @@ def _chunked_all_docs_dir(spark: SparkSession, sf_dir: str, n_chunks: int = 3) -
     files (doc_id % n) for file-stream micro-batch ingestion;
     fingerprint-cached like `_chunked_docs_dir` (which stages only
     the seeded incoming-batch side)."""
-    out_dir = os.path.join(
-        tempfile.gettempdir(),
-        f"swa_alldocs_stream_{os.path.basename(sf_dir)}_{n_chunks}",
-    )
-    src_stat = os.stat(os.path.join(sf_dir, "documents.parquet"))
-    marker = os.path.join(out_dir, "_STAGED")
-    fingerprint = f"{src_stat.st_mtime}:{src_stat.st_size}:{n_chunks}"
-    if os.path.isfile(marker) and open(marker).read() == fingerprint:
-        return out_dir
+    def write(build: str) -> None:
+        docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+        for i in range(n_chunks):
+            _write_chunk(build, docs.where(F.col("doc_id") % n_chunks == i), i)
 
-    from ..sources.tables import load_table
-
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    shutil.rmtree(out_dir, ignore_errors=True)
-    os.makedirs(out_dir)
-    for i in range(n_chunks):
-        tmp = os.path.join(out_dir, f"_tmp_{i}")
-        docs.where(F.col("doc_id") % n_chunks == i).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(tmp)
-        part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-        os.replace(os.path.join(tmp, part), os.path.join(out_dir, f"{i:02d}.parquet"))
-        shutil.rmtree(tmp)
-        os.utime(
-            os.path.join(out_dir, f"{i:02d}.parquet"),
-            (1_700_000_000 + i, 1_700_000_000 + i),
-        )
-    with open(marker, "w") as f:
-        f.write(fingerprint)
-    return out_dir
+    return stage(sf_dir, "documents", f"swa_alldocs_stream_{n_chunks}", write)
 
 
 def _cms_partial_cells(batch_df: DataFrame) -> DataFrame:
@@ -1005,39 +950,19 @@ def _chunked_scd2_updates_dir(spark: SparkSession, sf_dir: str) -> str:
     customer, balance +100 per round, absolute new values) as
     mtime-ordered parquet files for micro-batch ingestion;
     fingerprint-cached like the other staging helpers."""
-    out_dir = os.path.join(
-        tempfile.gettempdir(),
-        f"swa_scd2_stream_{os.path.basename(sf_dir)}_{SCD2_STREAM_ROUNDS}",
+    def write(build: str) -> None:
+        cust = load_table(spark, sf_dir, "customer")
+        for i in range(1, SCD2_STREAM_ROUNDS + 1):
+            batch = cust.where(F.col("c_custkey") % 5 == 0).select(
+                "c_custkey",
+                F.round(F.col("c_acctbal") + 100.0 * i, 2).alias("acctbal"),
+                F.lit(SCD2_STREAM_TS0 + i).cast("long").alias("batch_ts"),
+            )
+            _write_chunk(build, batch, i)
+
+    return stage(
+        sf_dir, "customer", f"swa_scd2_stream_{SCD2_STREAM_ROUNDS}", write
     )
-    src_stat = os.stat(os.path.join(sf_dir, "customer.parquet"))
-    marker = os.path.join(out_dir, "_STAGED")
-    fingerprint = f"{src_stat.st_mtime}:{src_stat.st_size}:{SCD2_STREAM_ROUNDS}"
-    if os.path.isfile(marker) and open(marker).read() == fingerprint:
-        return out_dir
-
-    from ..sources.tables import load_table
-
-    cust = load_table(spark, sf_dir, "customer")
-    shutil.rmtree(out_dir, ignore_errors=True)
-    os.makedirs(out_dir)
-    for i in range(1, SCD2_STREAM_ROUNDS + 1):
-        batch = cust.where(F.col("c_custkey") % 5 == 0).select(
-            "c_custkey",
-            F.round(F.col("c_acctbal") + 100.0 * i, 2).alias("acctbal"),
-            F.lit(SCD2_STREAM_TS0 + i).cast("long").alias("batch_ts"),
-        )
-        tmp = os.path.join(out_dir, f"_tmp_{i}")
-        batch.coalesce(1).write.mode("overwrite").parquet(tmp)
-        part = next(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-        os.replace(os.path.join(tmp, part), os.path.join(out_dir, f"{i:02d}.parquet"))
-        shutil.rmtree(tmp)
-        os.utime(
-            os.path.join(out_dir, f"{i:02d}.parquet"),
-            (1_700_000_000 + i, 1_700_000_000 + i),
-        )
-    with open(marker, "w") as f:
-        f.write(fingerprint)
-    return out_dir
 
 
 def streaming_scd2_customers(
@@ -1204,9 +1129,7 @@ def lambda_merged_uniques_hll(
         )
     )
     recent = events.where(F.col("ts") > cutoff)
-    speed_src = os.path.join(
-        tempfile.gettempdir(), f"swa_speed_uniq_{os.path.basename(sf_dir)}"
-    )
+    speed_src = staging_dir(sf_dir, "events", "swa_speed_uniq")
     (
         recent.select("event_id", "ts", "user_id", "event_type")
         .write.mode("overwrite")
@@ -1308,7 +1231,6 @@ def streaming_ngram_novelty(
 
     from pyspark import StorageLevel
 
-    from ..cacheutil import track_persisted
     from ..operators.dedup import _shingle_table
     from .llm import DUP_SEED_OFFSET, _corpus
 

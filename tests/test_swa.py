@@ -157,7 +157,7 @@ def test_keyvalue_export_delta_oracle_and_invariants(spark):
 
 
 def test_equiv_map_cache_serves_identical_mapping(spark):
-    """The r10 equiv-mapping cache (the _DEDUP_CC_CACHE convention):
+    """The r10 equiv-mapping cache (served once, like the dedup verdicts):
     repeat calls serve the SAME checkpoint-truncated frame (one CC
     per events corpus and session), the cached rows are bit-identical
     to a fresh un-cached CC over the same edges, and the build stays
